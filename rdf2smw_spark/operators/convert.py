@@ -4,13 +4,19 @@ Re-expresses TripleAggregateToWikiPageConverter.Run
 (/root/reference/components/triplestowikipageconv.go:78-175) as a
 relational plan:
 
-  stage A (dims, cheap):   subject_types, best_titles, class_depth,
-                           pred_titles, pred_smw_types
+  stage A (dims, cheap):   conversion_dims -> subjects (subject types
+                           + best titles, fused), class_depth, preds
+                           (predicate titles + SMW types)
   stage B (one shuffle):   enrich the triple stream with broadcast dims,
                            then ONE salted groupBy(subj) assembling facts,
-                           categories and the specific category
+                           categories and the specific category; page
+                           titles from ONE broadcast join of subjects
   stage C (tiny):          property-page merge (predPageIndex semantics,
                            :98-100,154-174) via full-outer join on title
+
+Every title — subject pages, predicates, object values — resolves
+through _resolve_titles over the one subjects dim, the counterpart of
+the reference's single convertUriToWikiTitle over its ResourceIndex.
 
 Everything is pyspark.sql built-ins — the whole plan is Catalyst-visible,
 whole-stage-codegen'd, and free of Python in the hot path.
@@ -50,121 +56,124 @@ from rdf2smw_spark.schemas import (
 EQUIVALENT_URI_PROP = "Equivalent URI"  # triplestowikipageconv.go:148-150
 
 
-def _persist_coalesced(df: DataFrame) -> DataFrame:
-    """scoped_persist with a bounded-ratio coalesce: the conversion
-    cache is re-read by ~10 downstream stages, so its partition count
-    is pure per-stage scheduling overhead once partitions are small.
-    The 12-branch union source inherits ~cores splits PER BRANCH from
-    the files.minPartitionNum floor (measured: a 112-partition cache of
-    5k-row partitions at sf0.1, ~0.3-0.5s of task-launch overhead per
-    re-scan). Coalesce (no shuffle) to max(defaultParallelism, n/8):
-    locally that is `cores` partitions; at scale the n/8 bound keeps
-    partitions >= cores and at most 8x larger than the scan splits, so
-    a 100 TB cache keeps ~GB partitions instead of collapsing to
-    total-cores."""
-    spark = df.sparkSession
+def _coalesce_for_reuse(df: DataFrame) -> DataFrame:
+    """Bounded-ratio coalesce before a cache that many downstream stages
+    re-read: its partition count is pure per-stage scheduling overhead
+    once partitions are small. The 12-branch union source inherits
+    ~cores splits PER BRANCH from the files.minPartitionNum floor
+    (measured: a 112-partition cache of 5k-row partitions at sf0.1,
+    ~0.3-0.5s of task-launch overhead per re-scan). Coalesce (no
+    shuffle) to max(defaultParallelism, n/8): locally that is `cores`
+    partitions; at scale the n/8 bound keeps partitions >= cores and at
+    most 8x larger than the scan splits, so a 100 TB cache keeps ~GB
+    partitions instead of collapsing to total-cores."""
     n = df.rdd.getNumPartitions()
-    target = max(spark.sparkContext.defaultParallelism, n // 8)
-    if n > target:
-        df = df.coalesce(target)
-    return scoped_persist(df)
+    target = max(df.sparkSession.sparkContext.defaultParallelism, n // 8)
+    return df.coalesce(target) if n > target else df
 
 
-def _title_expr(raw_col: str) -> F.Column:
-    return F.expr(sql_wiki_title_full(raw_col))
-
-
-def pred_titles(triples: DataFrame, bt: DataFrame) -> DataFrame:
-    """factTitle for every distinct predicate (convertUriToWikiTitle with
-    URITypePredicate, :95). Tiny dim — one row per predicate."""
-    preds = triples.select("pred").distinct()
+def _resolve_titles(df: DataFrame, key: str, subjects: DataFrame) -> DataFrame:
+    """convertUriToWikiTitle's lookup half (triplestowikipageconv.go:
+    200-254) for the IRI column `key` of df: ONE broadcast left join of
+    the fused subjects dim adds `uri_type` (Undefined when untyped) and
+    `fact_title` (best title, else the local name, through the full
+    wiki-title normaliser)."""
+    s = subjects.select(
+        F.col("subj").alias("__suri"),
+        F.col("uri_type").alias("__styp"),
+        F.col("raw_title").alias("__sraw"),
+    )
     return (
-        preds.join(bt, preds.pred == bt.subj, "left")
+        df.join(F.broadcast(s), F.col(key) == F.col("__suri"), "left")
+        .withColumn("__traw", F.coalesce(F.col("__sraw"), F.expr(sql_local_name(key))))
         .select(
-            "pred",
-            F.coalesce(F.col("raw_title"), F.expr(sql_local_name("pred"))).alias("__raw"),
+            *df.columns,
+            F.coalesce(F.col("__styp"), F.lit(URI_TYPE_UNDEFINED)).alias("uri_type"),
+            F.expr(sql_wiki_title_full("__traw")).alias("fact_title"),
         )
-        .select("pred", _title_expr("__raw").alias("pred_title"))
+    )
+
+
+def page_titles(df: DataFrame, subjects: DataFrame) -> DataFrame:
+    """df's rows plus (uri_type, title) for its `subj` column: the page
+    title is the resolved fact title under the Property:/Category:
+    namespace its uri_type selects. The ONE subject -> page-title
+    derivation — the conversion's pages, the incremental title closure
+    and the kg_wiki_titles query all key on it, so they cannot drift."""
+    ft = F.col("fact_title")
+    return (
+        _resolve_titles(df, "subj", subjects)
+        .withColumn(
+            "title",
+            F.when(F.col("uri_type") == URI_TYPE_PREDICATE, F.concat(F.lit("Property:"), ft))
+            .when(F.col("uri_type") == URI_TYPE_CLASS, F.concat(F.lit("Category:"), ft))
+            .otherwise(ft),
+        )
+        .drop("fact_title")
     )
 
 
 def conversion_dims(
-    spark: SparkSession, triples: DataFrame, cache: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The five conversion dimensions (subject_types, best_titles,
-    class_depth, pred_titles, pred_smw_types), derived from the full
-    stream. Exposed so incremental maintenance can MAINTAIN them: every
-    one is a pure function of the schema-ish predicate slice plus the
+    spark: SparkSession, triples: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The three conversion dimensions, derived from the full stream:
+
+      subjects     (subj, uri_type, raw_title) — T1 + J2 fused; either
+                   column nullable, untyped untitled subjects absent
+      class_depth  (uri, depth) — J3
+      preds        (pred, pred_title, has_types) — every predicate's
+                   fact title plus its sorted SMW 'Has type' values (A3)
+
+    Exposed so incremental maintenance can MAINTAIN them: every one is
+    a pure function of the schema-ish predicate slice plus the
     predicate/SMW-type inventory, both of which incremental_kg's
     delta_forces_rebuild probes — a fast-path delta cannot change any
     of them, so a standing service reuses stored copies instead of
-    re-deriving five full-stream passes per drain.
+    re-deriving full-stream passes per drain.
 
-    subject_types / best_titles / class_depth only read rdf:type,
-    rdfs:subClassOf and the 6 title predicates — pre-filtered once so
-    the three derivations scan a small cached frame instead of the full
-    stream (at web scale: ~1 type edge + <1 title triple per entity vs
-    dozens of fact triples)."""
+    subjects / class_depth only read rdf:type, rdfs:subClassOf and the
+    6 title predicates — pre-filtered once so both derivations scan a
+    small cached frame instead of the full stream (at web scale: ~1
+    type edge + <1 title triple per entity vs dozens of fact
+    triples)."""
     from rdf2smw_spark.schemas import TITLE_PROPERTIES
 
     dim_src = triples.filter(
         F.col("pred").isin(TITLE_PROPERTIES + [TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI])
     )
-    if cache:
-        dim_src = _persist_coalesced(dim_src)
+    dim_src = scoped_persist(_coalesce_for_reuse(dim_src))
 
     # ONE subj-keyed aggregation replaces the separate subject_types
     # groupBy + best_titles window over the same slice (guide §2.4);
     # null uri_type / raw_title rows carry the exact semantics the
     # absent rows had (every consumer left-joins + coalesces).
-    stbt = subject_types_and_titles(dim_src)
-    if cache:
-        stbt = scoped_persist(stbt)
-    st = stbt.select("subj", "uri_type")
-    bt = stbt.select("subj", "raw_title")
+    subjects = scoped_persist(subject_types_and_titles(dim_src))
     cd = class_depth(spark, dim_src)
-    # ONE pred-keyed pass covers both predicate dims (was: a distinct()
-    # for pred_titles plus a distinct+groupBy for pred_smw_types — two
-    # more full-stream scans and three exchanges). collect_set drops
-    # nulls and sort_array pins order, so has_types is byte-identical;
-    # preds with no typed observation now carry [] instead of being
-    # absent, which every consumer already coalesces to [].
+    # ONE pred-keyed full-stream pass yields both predicate dims (titles
+    # and SMW types). collect_set drops nulls and sort_array pins order;
+    # preds with no typed observation carry [].
     pred_inv = triples.groupBy("pred").agg(
         F.sort_array(
             F.collect_set(F.expr(sql_smw_type("obj_is_iri", "obj_datatype")))
         ).alias("has_types")
     )
-    if cache:
-        pred_inv = scoped_persist(pred_inv)
-    pst = pred_inv
-    pt = (
-        pred_inv.select("pred")
-        .join(bt, F.col("pred") == bt.subj, "left")
-        .select(
-            "pred",
-            F.coalesce(F.col("raw_title"), F.expr(sql_local_name("pred"))).alias("__raw"),
-        )
-        .select("pred", _title_expr("__raw").alias("pred_title"))
+    preds = scoped_persist(
+        _resolve_titles(pred_inv, "pred", subjects)
+        .select("pred", F.col("fact_title").alias("pred_title"), "has_types")
     )
-    return st, bt, cd, pt, pst
+    return subjects, cd, preds
 
 
 def triples_to_pages(
     spark: SparkSession,
     triples: DataFrame,
     n_salt: int = 16,
-    broadcast_dims: bool = True,
     cache: bool = True,
     only_subjects: DataFrame | None = None,
     dims: tuple | None = None,
 ) -> DataFrame:
     """Full conversion pass. Returns the WikiPage DataFrame
     (title, page_type, facts, categories, specific_category).
-
-    broadcast_dims: broadcast best_titles for the object-side title
-    lookup. Correct default for dims up to the broadcast threshold; at
-    10^12 documents the titled-entity dim may exceed it — set False and
-    the same plan runs as a sort-merge join (ideally on bucketed tables).
 
     only_subjects: optional single-column `subj` frame restricting the
     EXPENSIVE half of the plan (stage B enrichment + the salted
@@ -174,10 +183,12 @@ def triples_to_pages(
     identical to the same pages of an unrestricted run. This is the
     incremental-maintenance hook (operators/incremental_kg.py): at
     10^12 triples a 0.1% delta re-renders 0.1% of pages while the dim
-    passes stay slim pred-filtered scans."""
-    bc = F.broadcast if broadcast_dims else (lambda df: df)
+    passes stay slim pred-filtered scans.
 
-    # The triple stream feeds five dimension derivations plus the main
+    dims: conversion_dims' (subjects, class_depth, preds) when the
+    caller already holds them (maintained copies, or one derivation
+    shared with the incremental title closure)."""
+    # The triple stream feeds the dimension derivations plus the main
     # enrichment — materialize it once instead of recomputing the source
     # plan per consumer (the reference's ResourceIndexFanOut D1 is
     # exactly this DAG-reuse, residxfanout.go:15-25). localCheckpoint
@@ -190,16 +201,11 @@ def triples_to_pages(
     # replaces; at cluster scale a 100 TB stream would instead be a
     # checkpointed table (plans/lineage).
     if cache:
-        spark_ctx = spark.sparkContext
-        n_parts = triples.rdd.getNumPartitions()
-        target = max(spark_ctx.defaultParallelism, n_parts // 8)
-        if n_parts > target:
-            triples = triples.coalesce(target)
-        triples = scoped_local_checkpoint(triples)
+        triples = scoped_local_checkpoint(_coalesce_for_reuse(triples))
 
     if dims is None:
-        dims = conversion_dims(spark, triples, cache=cache)
-    st, bt, cd, pt, pst = dims
+        dims = conversion_dims(spark, triples)
+    subjects, cd, preds = dims
 
     # --- stage B: enrich + one salted groupBy(subj) -------------------------
     # Incremental restriction: stage B (and the obj-title dim, which only
@@ -219,20 +225,15 @@ def triples_to_pages(
     # replaces + regexes + truncation fold) — evaluating it on the
     # distinct-URI dim keeps the stream-side stages small and cheap.
     objs = stream.filter(F.col("obj_is_iri")).select(F.col("obj").alias("__ouri")).distinct()
-    obj_titles = (
-        objs.join(bt, objs.__ouri == bt.subj, "left")
-        .select(
-            "__ouri",
-            F.coalesce(F.col("raw_title"), F.expr(sql_local_name("__ouri"))).alias("__oraw"),
-        )
-        .select("__ouri", _title_expr("__oraw").alias("__otitle"))
+    obj_titles = _resolve_titles(objs, "__ouri", subjects).select(
+        "__ouri", F.col("fact_title").alias("__otitle")
     )
     cd_obj = cd.select(F.col("uri").alias("__curi"), "depth")
 
     e = (
-        stream.join(bc(pt), "pred")
-        .join(bc(obj_titles), F.col("obj") == F.col("__ouri"), "left")
-        .join(bc(cd_obj), F.col("obj") == F.col("__curi"), "left")
+        stream.join(F.broadcast(preds.select("pred", "pred_title")), "pred")
+        .join(F.broadcast(obj_titles), F.col("obj") == F.col("__ouri"), "left")
+        .join(F.broadcast(cd_obj), F.col("obj") == F.col("__curi"), "left")
     )
 
     is_cat = F.col("pred").isin([TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI])
@@ -278,13 +279,8 @@ def triples_to_pages(
             F.min("cat_sel").alias("sel"),
         )
 
-    bt_subj = bt.select(F.col("subj").alias("__suri"), F.col("raw_title").alias("__sraw"))
     pages0 = (
-        agg.join(st, "subj", "left")
-        .join(bc(bt_subj), F.col("subj") == F.col("__suri"), "left")
-        .withColumn("uri_type", F.coalesce(F.col("uri_type"), F.lit(URI_TYPE_UNDEFINED)))
-        .withColumn("__traw", F.coalesce(F.col("__sraw"), F.expr(sql_local_name("subj"))))
-        .withColumn("fact_title", _title_expr("__traw"))
+        page_titles(agg, subjects)
         .withColumn("__deduped", dedup_sorted(F.sort_array(F.col("facts_raw"))))
         .withColumn(
             "__equiv",
@@ -302,12 +298,6 @@ def triples_to_pages(
         )
         .withColumn("categories", dedup_sorted(F.sort_array(F.col("cats_raw"))))
         .withColumn("specific_category", F.col("sel.name"))
-        .withColumn(
-            "title",
-            F.when(F.col("uri_type") == URI_TYPE_PREDICATE, F.concat(F.lit("Property:"), F.col("fact_title")))
-            .when(F.col("uri_type") == URI_TYPE_CLASS, F.concat(F.lit("Category:"), F.col("fact_title")))
-            .otherwise(F.col("fact_title")),
-        )
         .select("subj", "title", F.col("uri_type").alias("page_type"), "facts", "categories", "specific_category")
     )
     if cache:
@@ -319,10 +309,8 @@ def triples_to_pages(
     # predPageIndex is keyed by page TITLE (:98), so same-title predicates
     # merge; 'Has type' facts from the whole stream come first.
     prop_base = (
-        pt.join(pst, "pred", "left")
-        .select(
-            F.concat(F.lit("Property:"), F.col("pred_title")).alias("title"),
-            F.coalesce(F.col("has_types"), F.array().cast("array<string>")).alias("has_types"),
+        preds.select(
+            F.concat(F.lit("Property:"), F.col("pred_title")).alias("title"), "has_types"
         )
         .groupBy("title")
         .agg(dedup_sorted(F.sort_array(F.flatten(F.collect_list("has_types")))).alias("has_types"))

@@ -38,62 +38,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf2smw_spark.functions.textnorm import sql_local_name, sql_wiki_title_full
-from rdf2smw_spark.operators.dimensions import best_titles, subject_types
+from rdf2smw_spark.operators.convert import page_titles
+from rdf2smw_spark.operators.dimensions import subject_types_and_titles
 from rdf2smw_spark.schemas import (
     SUBCLASS_PROPERTY_URI,
     TITLE_PROPERTIES,
     TYPE_PROPERTY_URI,
-    URI_TYPE_CLASS,
-    URI_TYPE_PREDICATE,
-    URI_TYPE_UNDEFINED,
 )
 
 SCHEMA_PREDS = list(TITLE_PROPERTIES) + [TYPE_PROPERTY_URI, SUBCLASS_PROPERTY_URI]
 
 
-def _subject_titles(
-    full: DataFrame,
-    st: DataFrame | None = None,
-    bt: DataFrame | None = None,
-) -> DataFrame:
-    """(subj, title) for every subject — the SAME title derivation as
-    triples_to_pages stage B (best-title fallback to local name, then
-    the Property:/Category: prefix by uri_type) so the closure keys
-    match the rendered page titles exactly.
+def _subject_titles(full: DataFrame, subjects: DataFrame | None = None) -> DataFrame:
+    """(subj, title) for every subject — convert.page_titles, the SAME
+    derivation triples_to_pages renders with, so the closure keys match
+    the rendered page titles exactly.
 
-    st/bt: pre-derived subject_types / best_titles dims (the first two
-    members of convert.conversion_dims) — pass them when the caller
-    already derived the conversion dims from the SAME full stream, so
-    the title closure shares those plans instead of re-deriving two
-    full schema-slice passes."""
-    if st is None or bt is None:
-        dim_src = full.filter(F.col("pred").isin(SCHEMA_PREDS))
-        st = subject_types(dim_src) if st is None else st
-        bt = best_titles(dim_src) if bt is None else bt
-    bt = bt.select(
-        F.col("subj").alias("__suri"), F.col("raw_title").alias("__sraw")
-    )
-    subs = full.select("subj").distinct()
-    return (
-        subs.join(F.broadcast(bt), subs["subj"] == bt["__suri"], "left")
-        .join(st, "subj", "left")
-        .withColumn("uri_type", F.coalesce("uri_type", F.lit(URI_TYPE_UNDEFINED)))
-        .withColumn("__traw", F.coalesce("__sraw", F.expr(sql_local_name("subj"))))
-        .withColumn("__ft", F.expr(sql_wiki_title_full("__traw")))
-        .select(
-            "subj",
-            F.when(
-                F.col("uri_type") == URI_TYPE_PREDICATE,
-                F.concat(F.lit("Property:"), F.col("__ft")),
-            )
-            .when(
-                F.col("uri_type") == URI_TYPE_CLASS,
-                F.concat(F.lit("Category:"), F.col("__ft")),
-            )
-            .otherwise(F.col("__ft"))
-            .alias("title"),
+    subjects: the pre-derived subjects dim (the first member of
+    convert.conversion_dims) — pass it when the caller already derived
+    the conversion dims from the SAME full stream, so the title closure
+    shares that plan instead of re-deriving the schema-slice pass."""
+    if subjects is None:
+        subjects = subject_types_and_titles(
+            full.filter(F.col("pred").isin(SCHEMA_PREDS))
         )
-    )
+    return page_titles(full.select("subj").distinct(), subjects).select("subj", "title")
 
 
 def affected_subjects(
@@ -146,10 +115,10 @@ def delta_forces_rebuild(
     same decision and keep its maintained dims consistent.
 
     dims: when the maintained conversion dims are available, the probe
-    checks the delta against the stored pred-title inventory (pt) and
-    SMW-type inventory (pst) — NO base scan at all; otherwise it derives
-    the (pred, type) inventory from base (one distinct-projection
-    scan). New (pred, NULL-type) combinations on a known pred do not
+    checks the delta against the stored predicate inventory (preds:
+    every known pred and its SMW types) — NO base scan at all;
+    otherwise it derives the (pred, type) inventory from base (one
+    distinct-projection scan). New (pred, NULL-type) combinations on a known pred do not
     rebuild: NULL types never contribute 'Has type' facts."""
     if delta.filter(F.col("pred").isin(SCHEMA_PREDS)).limit(1).count() > 0:
         return True
@@ -158,14 +127,14 @@ def delta_forces_rebuild(
     ty = F.expr(sql_smw_type("obj_is_iri", "obj_datatype"))
     d_pairs = delta.select("pred", ty.alias("__ty")).distinct()
     if dims is not None:
-        _st, _bt, _cd, pt, pst = dims
+        _subjects, _cd, preds = dims
         if (
             d_pairs.select("pred").distinct()
-            .join(pt.select("pred"), "pred", "anti")
+            .join(preds.select("pred"), "pred", "anti")
             .limit(1).count() > 0
         ):
             return True
-        known = pst.select("pred", F.explode("has_types").alias("__ty"))
+        known = preds.select("pred", F.explode("has_types").alias("__ty"))
         new_pairs = d_pairs.filter(F.col("__ty").isNotNull()).join(
             known, ["pred", "__ty"], "anti"
         )
@@ -192,7 +161,7 @@ def incremental_pages(
     collect-is-the-guard discipline.
 
     subject_titles / dims: MAINTAINED copies of the (subj, title) dim
-    and the five conversion dims from the previous run. Both are pure
+    and the three conversion dims from the previous run. Both are pure
     functions of exactly the inputs delta_forces_rebuild probes, so on
     the fast path a standing service passes the stored frames and the
     drain does NO full-stream dimension pass at all — the remaining
@@ -217,14 +186,13 @@ def incremental_pages(
         return triples_to_pages(spark, full, cache=False)
     if dims is None:
         # fast path established: dims(full) == dims(base-maintained), so
-        # ONE derivation now serves the title closure (st/bt) AND the
-        # restricted conversion — without this, subject_types/best_titles
+        # ONE derivation now serves the title closure (subjects) AND the
+        # restricted conversion — without this, subject types and titles
         # were derived twice per drain (measured 22s -> 12s at sf0.001)
-        dims = conversion_dims(spark, full, cache=True)
+        dims = conversion_dims(spark, full)
+    subjects, _cd, _preds = dims
     if subject_titles is None:
-        subject_titles = scoped_persist(
-            _subject_titles(full, st=dims[0], bt=dims[1])
-        )
+        subject_titles = scoped_persist(_subject_titles(full, subjects))
     return triples_to_pages(
         spark,
         full,

@@ -21,7 +21,6 @@ from rdf2smw_spark.extract import (
     site_stats,
     site_stats_sql,
 )
-from rdf2smw_spark.functions.textnorm import sql_local_name, sql_wiki_title_full
 from rdf2smw_spark.operators import asof as _asof
 from rdf2smw_spark.operators import dedup as dd
 from rdf2smw_spark.operators import graph as gr
@@ -34,12 +33,13 @@ from rdf2smw_spark.operators import search as _search
 from rdf2smw_spark.operators import similarity as sim
 from rdf2smw_spark.operators import weblinks as wl
 from rdf2smw_spark.operators import text_analysis as ta
-from rdf2smw_spark.operators.convert import triples_to_pages
+from rdf2smw_spark.operators.convert import page_titles, triples_to_pages
 from rdf2smw_spark.operators.dimensions import (
     best_titles,
     class_depth,
     pred_smw_types,
     subject_types,
+    subject_types_and_titles,
 )
 from rdf2smw_spark.schemas import TYPE_PROPERTY_URI, URI_TYPE_PREDICATE
 from rdf2smw_spark.session import read_parquet_cached_schema as _rp
@@ -130,24 +130,9 @@ def q_kg_pred_smw_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _wiki_titles(spark: SparkSession, triples: DataFrame) -> DataFrame:
-    st = subject_types(triples)
-    bt = best_titles(triples)
-    subjects = triples.select("subj").distinct()
-    return (
-        subjects.join(bt, "subj", "left")
-        .join(st, "subj", "left")
-        .withColumn("uri_type", F.coalesce("uri_type", F.lit(1)))
-        .withColumn("__raw", F.coalesce("raw_title", F.expr(sql_local_name("subj"))))
-        .withColumn("__t", F.expr(sql_wiki_title_full("__raw")))
-        .select(
-            "subj",
-            F.when(F.col("uri_type") == 2, F.concat(F.lit("Property:"), "__t"))
-            .when(F.col("uri_type") == 3, F.concat(F.lit("Category:"), "__t"))
-            .otherwise(F.col("__t"))
-            .alias("page_title"),
-            "uri_type",
-        )
-    )
+    return page_titles(
+        triples.select("subj").distinct(), subject_types_and_titles(triples)
+    ).select("subj", F.col("title").alias("page_title"), "uri_type")
 
 
 def q_kg_wiki_titles(spark: SparkSession, sf_dir: str) -> DataFrame:

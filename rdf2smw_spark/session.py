@@ -23,11 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 # Blast radius (ADVICE r3): the registry is PROCESS-GLOBAL, not per-
 # composition — release_scoped_caches() unpersists frames registered by
 # ANY in-flight composition in the process, including another thread's.
-# The failure mode is recomputation (a released frame re-materializes on
-# next use), never wrong answers, so the single sequential driver this
-# repo runs (CLI, bench, pytest, oracle checker) is safe; a caller
-# interleaving pipelines concurrently in one process must serialize its
-# release points at composition boundaries.
+# Never wrong answers, but two failure modes: a released scoped_persist
+# frame re-materializes on next use (recomputation), while a released
+# scoped_local_checkpoint frame has no lineage left and raises a
+# SparkException on re-use. The single sequential driver this repo runs
+# (CLI, bench, pytest, oracle checker) is safe; a caller interleaving
+# pipelines concurrently in one process must serialize its release
+# points strictly at composition boundaries.
 
 _SCOPED_CACHES: list[DataFrame] = []
 
@@ -54,24 +56,29 @@ class _CheckpointHandle:
 
     def unpersist(self, blocking: bool = False) -> None:
         lp = self._df._jdf.queryExecution().analyzed()
-        if lp.getClass().getSimpleName() == "LogicalRDD":
-            lp.rdd().unpersist(blocking)
+        node = lp.getClass().getSimpleName()
+        if node != "LogicalRDD":
+            # raise rather than no-op so release_scoped_caches does not
+            # count a handle whose blocks it could not drop
+            raise TypeError(f"not a localCheckpoint plan: {node}")
+        lp.rdd().unpersist(blocking)
 
 
-def scoped_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint + register its backing RDD for bulk release.
+def scoped_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint + register its backing RDD for bulk release.
 
     Unlike a scoped persist, a released checkpoint is UNRECOVERABLE (no
     lineage to recompute from): callers must only release at composition
     boundaries, after the terminal action — which is the existing
     release_scoped_caches contract."""
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     _SCOPED_CACHES.append(_CheckpointHandle(ck))  # type: ignore[arg-type]
     return ck
 
 
 def release_scoped_caches(blocking: bool = False) -> int:
-    """Unpersist every scoped cache; returns how many were released.
+    """Unpersist every scoped cache; returns how many were released (a
+    handle that fails to release is dropped from the registry uncounted).
     Safe to call repeatedly; recomputation (not wrong answers) is the
     worst case if a released persisted frame is re-used afterwards
     (a released scoped_local_checkpoint frame instead fails loudly —

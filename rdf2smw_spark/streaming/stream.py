@@ -454,7 +454,9 @@ def run_stream_incremental_pages(
     actually changed.
 
     Layout under work_dir: triples/ (append-only parquet),
-    pages/ (upserted parquet keyed by title), ckpt/ (stream checkpoint).
+    pages/ (upserted parquet keyed by title), titles/ (the maintained
+    (subj, title) dim), dims/{subjects,class_depth,preds}/ (the
+    maintained convert.conversion_dims), ckpt/ (stream checkpoint).
     Returns {batches, pages_total} for the caller's logbook.
 
     Scale shape: the upsert is anti-join + union + full rewrite of
@@ -479,7 +481,7 @@ def run_stream_incremental_pages(
     titles_dir = os.path.join(work_dir, "titles")
     dims_dir = os.path.join(work_dir, "dims")
     ckpt_dir = os.path.join(work_dir, "ckpt")
-    _DIMS = ("st", "bt", "cd", "pt", "pst")
+    _DIMS = ("subjects", "class_depth", "preds")
     state = {"batches": 0}
 
     def _write_dims(dims):
@@ -487,9 +489,13 @@ def run_stream_incremental_pages(
             df.write.mode("overwrite").parquet(os.path.join(dims_dir, name))
 
     def _read_dims():
-        return tuple(
-            spark.read.parquet(os.path.join(dims_dir, n)) for n in _DIMS
-        )
+        # None unless every dim is stored — a work dir written under an
+        # older dims layout then takes the rebuild path, which rewrites
+        # the dims in this layout
+        paths = [os.path.join(dims_dir, n) for n in _DIMS]
+        if not all(os.path.isdir(p) for p in paths):
+            return None
+        return tuple(spark.read.parquet(p) for p in paths)
 
     def _process(batch, batch_id):
         parsed = parse_ntriples_lines(batch).filter(F.col("error").isNull())
@@ -504,9 +510,7 @@ def run_stream_incremental_pages(
         new_titles = None
         if have_base:
             base = spark.read.parquet(triples_dir)
-            stored_dims = (
-                _read_dims() if os.path.isdir(dims_dir) else None
-            )
+            stored_dims = _read_dims()
             if (
                 stored_dims is not None
                 and os.path.isdir(titles_dir)
@@ -516,7 +520,7 @@ def run_stream_incremental_pages(
                 # cannot retitle, retype, or re-depth anything (that is
                 # what delta_forces_rebuild probes), so the stored
                 # (subj, title) dim — advanced O(delta) for new subjects
-                # — and the five stored conversion dims replace all the
+                # — and the three stored conversion dims replace all the
                 # full-stream dimension passes this drain would pay
                 titles = spark.read.parquet(titles_dir)
                 new_titles = maintained_subject_titles(titles, delta).localCheckpoint()
@@ -552,11 +556,13 @@ def run_stream_incremental_pages(
             new_titles.write.mode("overwrite").parquet(titles_dir)
             # conversion dims unchanged on the fast path — no rewrite
         else:
-            allt = spark.read.parquet(triples_dir)
-            _subject_titles(allt).write.mode("overwrite").parquet(titles_dir)
             from rdf2smw_spark.operators.convert import conversion_dims
 
-            _write_dims(conversion_dims(spark, allt, cache=False))
+            allt = spark.read.parquet(triples_dir)
+            dims = conversion_dims(spark, allt)
+            _write_dims(dims)
+            subjects, _cd, _preds = dims
+            _subject_titles(allt, subjects).write.mode("overwrite").parquet(titles_dir)
         release_scoped_caches()
         state["batches"] += 1
 

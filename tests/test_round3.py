@@ -154,6 +154,22 @@ def test_scoped_local_checkpoint_releases_backing_blocks(spark):
     assert not (ids() & new_ids), "checkpoint blocks must be gone after release"
 
 
+def test_checkpoint_handle_over_plain_frame_not_counted(spark):
+    # a handle whose plan is not a LogicalRDD has no checkpoint blocks
+    # to drop: its release must fail loudly and go uncounted, not pass
+    # for a released checkpoint
+    from rdf2smw_spark.session import (
+        _SCOPED_CACHES,
+        _CheckpointHandle,
+        release_scoped_caches,
+    )
+
+    release_scoped_caches(blocking=True)
+    _SCOPED_CACHES.append(_CheckpointHandle(spark.range(10)))
+    assert release_scoped_caches(blocking=True) == 0
+    assert not _SCOPED_CACHES
+
+
 # --- resume fingerprinting (ADVICE r2, medium) -------------------------------------
 
 
